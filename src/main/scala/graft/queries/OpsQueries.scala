@@ -23,6 +23,41 @@ object OpsQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
+  /** The dataset-path suffix that every per-dataset state dir and
+    * table name ends with (`<name>_<sfx>`, so `_d16__root_…` for a
+    * versioned name) — [[graft.tools.StateGc]] parses names by it.
+    */
+  private[graft] def sfx(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** `<warehouse>/<name>`: where a query keeps the state it owns. */
+  private def whPath(s: SparkSession, name: String): String =
+    s.conf.get("spark.sql.warehouse.dir") + "/" + name
+
+  /** Delete `path` — state the calling query rebuilds from scratch on
+    * every call — and return it.
+    */
+  private def freshState(s: SparkSession, path: String): String = {
+    graft.streaming.VersionedState.deleteAll(s, Seq(path))
+    path
+  }
+
+  /** Run `build` over `base` unless its `_BUILT` marker shows an
+    * earlier call completed it (a partial build, with no marker,
+    * restarts from empty). Some(result) iff this call built.
+    */
+  private def buildOnce[T](s: SparkSession, base: String)(
+      build: => T): Option[T] =
+    if (graft.streaming.VersionedState.exists(s, s"$base/_BUILT")) None
+    else {
+      freshState(s, base)
+      val built = build
+      val marker = new org.apache.hadoop.fs.Path(s"$base/_BUILT")
+      marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .create(marker).close()
+      Some(built)
+    }
+
   // ---------------------------------------------------------------- q20
   /** Exact dedup groups by content hash (SURVEY.md §2.3 D1/D3). */
   def q20(s: SparkSession, dir: String): DataFrame =
@@ -60,7 +95,7 @@ object OpsQueries {
     * different dirs cannot collide.
     */
   def q84(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val setsT = s"graft_lsh_sets_$sfx"
     val bucketsT = s"graft_lsh_buckets_$sfx"
     Dedup.writeLshAssets(t(s, dir, "documents"), "doc_id", "text",
@@ -83,14 +118,10 @@ object OpsQueries {
     * verbatim.
     */
   def q110(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val setsT = s"graft_lsh_csets_$sfx"
     val bucketsT = s"graft_lsh_cbuckets_$sfx"
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q110_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val base = freshState(s, whPath(s, s"graft_q110_state_$sfx"))
     Seq(setsT, bucketsT).foreach(t =>
       s.sql(s"DROP TABLE IF EXISTS `$t`"))
     val docs = t(s, dir, "documents")
@@ -180,13 +211,9 @@ object OpsQueries {
     * verbatim.
     */
   def q111(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"graft_span_blk111_$sfx"
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q111_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val base = freshState(s, whPath(s, s"graft_q111_state_$sfx"))
     s.sql(s"DROP TABLE IF EXISTS `$tbl`")
     val docs = t(s, dir, "documents")
     def feed(i: Int): Unit =
@@ -504,7 +531,7 @@ object OpsQueries {
     * postings scan). Table names embed the sf dir (q84/q94 pattern).
     */
   def q95(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val (post, dfT, st) = (s"graft_bm25_post_$sfx", s"graft_bm25_df_$sfx",
       s"graft_bm25_stats_$sfx")
     Search.writeBm25Index(t(s, dir, "documents"), "doc_id", Seq("text"),
@@ -860,7 +887,7 @@ object OpsQueries {
     val qs = p.filter(col("vec_id") < 5)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
     val coarse = Similarity.strideCentroids(p, 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_index_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -898,7 +925,7 @@ object OpsQueries {
     // before this split; PROFILE round 6 records the ladder).
     val rcb = Similarity.pqCodebooks(
       Similarity.residualCorpus(p, coarse), m = 8, dims = 64, stride = 13L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_residx_$sfx"
     Similarity.writePqIndexResidual(p, coarse, rcb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -933,7 +960,7 @@ object OpsQueries {
     val res = Similarity.residualCorpus(p, coarse)
     val rcb = Similarity.pqCodebooksTrained(res, m = 8, dims = 64,
       stride = 13L, iters = pqTrainIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_residx_t_$sfx"
     Similarity.writePqIndexResidual(p, coarse, rcb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -976,7 +1003,7 @@ object OpsQueries {
     val res = Similarity.residualCorpus(p, coarse)
     val rcb = Similarity.pqCodebooksTrained(res, m = 8, dims = 64,
       stride = 13L, iters = pqTrainIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_rotidx_$sfx"
     Similarity.writePqIndexResidual(p, coarse, rcb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -1020,7 +1047,7 @@ object OpsQueries {
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
     val coarse = Similarity.coarseForCorpus(p, nLists = coarseNLists,
       samplePermille = coarsePermille, iters = ivfKmeansIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_idx103_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -1054,7 +1081,7 @@ object OpsQueries {
       ksub = 64)
     val coarse = Similarity.coarseForCorpus(p, nLists = coarseNLists,
       samplePermille = coarsePermille, iters = ivfKmeansIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_idx109_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -1086,7 +1113,7 @@ object OpsQueries {
   def q104(s: SparkSession, dir: String): DataFrame = {
     val p = prep(s, dir)
     val qs = p.filter(col("vec_id") < 5)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_srv104_$sfx"
     val coarseT = s"graft_pq_srv104_coarse_$sfx"
     val cbT = s"graft_pq_srv104_cb_$sfx"
@@ -1113,7 +1140,7 @@ object OpsQueries {
   def q105(s: SparkSession, dir: String): DataFrame = {
     val p = prep(s, dir)
     val qs = p.filter(col("vec_id") < 5)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_srv105_$sfx"
     val coarseT = s"graft_pq_srv105_coarse_$sfx"
     val cbT = s"graft_pq_srv105_cb_$sfx"
@@ -1233,7 +1260,7 @@ object OpsQueries {
     val res = Similarity.residualCorpus(p, coarse)
     val rcb = Similarity.pqCodebooksTrained(res, m = 8, dims = 64,
       stride = 13L, iters = pqTrainIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_residx_opq_$sfx"
     Similarity.writePqIndexResidual(p, coarse, rcb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -1289,7 +1316,7 @@ object OpsQueries {
     val p = prep(s, dir)
     val qs = p.filter(col("vec_id") < 5)
     val coarse = Similarity.strideCentroids(p, 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_sq_index_$sfx"
     Similarity.writeSqIndex(p, coarse, idxT)
     Similarity.requireSqIndexCompatible(s, idxT, coarse)
@@ -1341,14 +1368,10 @@ object OpsQueries {
     val qs = p.filter(col("vec_id") < 5)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
     val coarse = Similarity.strideCentroids(p, 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"graft_pq_cidx107_$sfx"
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q107_state_$sfx"
+    val base = freshState(s, whPath(s, s"graft_q107_state_$sfx"))
     // deterministic clean slate (the query owns this state)
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
     s.sql(s"DROP TABLE IF EXISTS `$tbl`")
     // per-slice state writes use Similarity.pqIndexRows — the exact
     // builder pqIndexBatch wraps (it re-prepares from raw floats;
@@ -1391,11 +1414,8 @@ object OpsQueries {
   def q100(s: SparkSession, dir: String): DataFrame = {
     val su = graft.streaming.StreamingUpsert
     val docs = t(s, dir, "documents")
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_q100_bm25_incr_${s.sparkContext.applicationId}").toString
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(bp)) fs.delete(bp, true)
+    val base = freshState(s, new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_q100_bm25_incr_${s.sparkContext.applicationId}").toString)
     (0 until 3).foreach { i =>
       su.bm25IndexBatch(s,
         docs.filter(pmod(col("doc_id"), lit(3)) === i),
@@ -1419,13 +1439,9 @@ object OpsQueries {
     val p = prep(s, dir)
     val qs = p.filter(col("vec_id") < 5)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"graft_pq_codes112_$sfx"
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q112_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val base = freshState(s, whPath(s, s"graft_q112_state_$sfx"))
     s.sql(s"DROP TABLE IF EXISTS `$tbl`")
     def feed(sel: org.apache.spark.sql.Column, id: Long): Unit =
       Similarity.pqEncode(p.filter(sel), cb, 8, 64)
@@ -1458,14 +1474,10 @@ object OpsQueries {
   def q113(s: SparkSession, dir: String): DataFrame = {
     val su = graft.streaming.StreamingUpsert
     val docs = t(s, dir, "documents")
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val (postT, statT) = (s"graft_bm25_cpost113_$sfx",
       s"graft_bm25_cstat113_$sfx")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q113_state_$sfx"
-    val bp = new org.apache.hadoop.fs.Path(base)
-    val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(bp)) fs.delete(bp, true)
+    val base = freshState(s, whPath(s, s"graft_q113_state_$sfx"))
     Seq(postT, statT).foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
     def feed(i: Int): Unit =
       su.bm25IndexBatch(s, docs.filter(pmod(col("doc_id"), lit(3)) === i),
@@ -1499,7 +1511,7 @@ object OpsQueries {
       iters = ivfKmeansIters)
     val cb = Similarity.pqCodebooksTrained(p, m = 8, dims = 64,
       stride = 25L, iters = pqTrainIters)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_idx99_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     val exact = Similarity.knnBrute(p, qs, 10)
@@ -1527,7 +1539,7 @@ object OpsQueries {
     val p = prep(s, dir)
     val coarse = Similarity.strideCentroids(p, 25L)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_idx98_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     Similarity.pqIndexStats(s, idxT)
@@ -1753,7 +1765,7 @@ object OpsQueries {
   def q124(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"zorder_lineitem_$sfx"
     graft.ops.Layout.writeZOrdered(
       t(s, dir, "lineitem")
@@ -1783,7 +1795,7 @@ object OpsQueries {
   def q125(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"manifest_z_lineitem_$sfx"
     val man = s"manifest_stats_lineitem_$sfx"
     graft.ops.Layout.writeZOrdered(
@@ -1811,7 +1823,7 @@ object OpsQueries {
   def q126(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val asset = s"bloom_orders_month_$sfx"
     val o = t(s, dir, "orders")
       .filter($"o_orderdate" >= lit("1995-03-01").cast("timestamp") &&
@@ -1840,7 +1852,7 @@ object OpsQueries {
   def q127(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"zorder_eq_lineitem_$sfx"
     graft.ops.Layout.writeZOrdered(
       t(s, dir, "lineitem")
@@ -1870,7 +1882,7 @@ object OpsQueries {
   def q128(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"bloomidx_lineitem_$sfx"
     val idx = s"bloomidx_orderkey_$sfx"
     val mBits = 1 << 17
@@ -1906,7 +1918,7 @@ object OpsQueries {
   def q129(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"compact_z_lineitem_$sfx"
     val li = t(s, dir, "lineitem")
       .select($"l_orderkey", $"l_partkey", $"l_suppkey", $"l_quantity")
@@ -1942,7 +1954,7 @@ object OpsQueries {
   def q130(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"conj_z_lineitem_$sfx"
     val man = s"conj_stats_lineitem_$sfx"
     graft.ops.Layout.writeZOrdered(
@@ -2124,7 +2136,7 @@ object OpsQueries {
   def q132(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"serve_z_lineitem_$sfx"
     val man = s"serve_stats_lineitem_$sfx"
     val idx = s"serve_bloom_lineitem_$sfx"
@@ -2182,7 +2194,7 @@ object OpsQueries {
   def q133(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"pkcluster_lineitem_$sfx"
     val idx = s"pkcluster_bloom_$sfx"
     val mBits = 1 << 17
@@ -2222,7 +2234,7 @@ object OpsQueries {
   def q134(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"maint_z_lineitem_$sfx"
     val man = s"maint_stats_lineitem_$sfx"
     val cols = Seq("l_partkey", "l_suppkey")
@@ -2267,7 +2279,7 @@ object OpsQueries {
   def q135(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"bloomincr_lineitem_$sfx"
     val idx = s"bloomincr_orderkey_$sfx"
     val mBits = 1 << 17
@@ -2306,7 +2318,7 @@ object OpsQueries {
   def q136(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"summary_lineitem_$sfx"
     val measures = Seq("l_quantity", "l_extendedprice")
     if (!s.catalog.tableExists(tbl))
@@ -2336,7 +2348,7 @@ object OpsQueries {
   def q137(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"sumincr_lineitem_$sfx"
     val tbl = s"sumincr_summary_$sfx"
     val measures = Seq("l_quantity", "l_extendedprice")
@@ -2386,7 +2398,7 @@ object OpsQueries {
     */
   def q138(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"sumrw_lineitem_$sfx"
     val tbl = s"sumrw_summary_$sfx"
     if (!(s.catalog.tableExists(base) && s.catalog.tableExists(tbl))) {
@@ -2470,7 +2482,7 @@ object OpsQueries {
     val qs = p.filter(col("vec_id") < 5)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
     val coarse = Similarity.strideCentroids(p, 25L)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pqf_index_$sfx"
     Similarity.writePqIndex(p, coarse, cb, m = 8, dims = 64, idxT)
     val allowed = p.filter(col("vec_id") % 3 =!= 0).select(col("vec_id"))
@@ -2525,12 +2537,8 @@ object OpsQueries {
   def q141(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q141_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q141_state_$sfx"))
     val li = t(s, dir, "lineitem")
       .select($"l_orderkey", $"l_returnflag", $"l_linestatus",
         $"l_quantity", $"l_extendedprice")
@@ -2573,7 +2581,7 @@ object OpsQueries {
   def q142(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"part_lineitem_$sfx"
     if (!s.catalog.tableExists(tbl))
       graft.Tables.writePartitioned(
@@ -2637,7 +2645,7 @@ object OpsQueries {
   def q143(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.Fns._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"sumz_lineitem_$sfx"
     val sum = s"sumz_summary_$sfx"
     val li = t(s, dir, "lineitem")
@@ -2714,7 +2722,7 @@ object OpsQueries {
     */
   def q145(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"hllsum_events_$sfx"
     val tbl = s"hllsum_sketch_$sfx"
     val e = t(s, dir, "events")
@@ -2875,12 +2883,8 @@ object OpsQueries {
     * oracle as q150: arrival order and replays must be invisible.
     */
   def q152(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q152_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q152_state_$sfx"))
     val p = prep(s, dir)
     val cents = Similarity.strideCentroids(p, 25L)
     def feed(slice: DataFrame): Unit =
@@ -2967,14 +2971,10 @@ object OpsQueries {
     * entire maintenance protocol must be results-invisible.
     */
   def q157(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q157_state_$sfx"
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q157_state_$sfx"))
     val (vecsT, dropsT) =
       (s"graft_semdedup_cvecs_$sfx", s"graft_semdedup_cdrops_$sfx")
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
     Seq(vecsT, dropsT).foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
     val p = prep(s, dir)
     val cents = Similarity.strideCentroids(p, 25L)
@@ -3352,7 +3352,7 @@ object OpsQueries {
     */
   def q179(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"sumbench_lineitem_$sfx"
     val tbl = s"sumbench_summary_$sfx"
     val li = t(s, dir, "lineitem")
@@ -3416,7 +3416,7 @@ object OpsQueries {
     */
   def q181(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"qsincr_lineitem_$sfx"
     val tbl = s"qsincr_sketch_$sfx"
     val li = t(s, dir, "lineitem")
@@ -3452,12 +3452,8 @@ object OpsQueries {
     */
   def q182(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q182_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q182_state_$sfx"))
     val li = t(s, dir, "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_partkey", $"l_suppkey",
         $"l_returnflag", $"l_extendedprice")
@@ -3632,12 +3628,8 @@ object OpsQueries {
     * chain on the full corpus, so q49's oracle applies verbatim.
     */
   def q190(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q190_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q190_state_$sfx"))
     val docs = t(s, dir, "documents")
     val isNew = pmod(col("doc_id"), lit(10)) === 7
     def feed(slice: DataFrame): Unit =
@@ -3673,12 +3665,8 @@ object OpsQueries {
     * q49's oracle verbatim.
     */
   def q191(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q191_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q191_state_$sfx"))
     val pairs = graft.ops.Materialize.Local(q23(s, dir))
     def slice(i: Int): DataFrame =
       pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(3)) === i)
@@ -3809,12 +3797,8 @@ object OpsQueries {
     * oracle applies verbatim.
     */
   def q195(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q195_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q195_state_$sfx"))
     val recs = dirtyParts(s, dir)
     val isNew = pmod(col("rec_id"), lit(10)) === 3
     def feed(slice: DataFrame): Unit =
@@ -3981,7 +3965,7 @@ object OpsQueries {
     */
   def q202(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"bpe_merges_$sfx"
     val docs = t(s, dir, "documents")
     // Tables.writeTable (stage-and-swap): the warehouse DIRECTORY
@@ -4294,12 +4278,8 @@ object OpsQueries {
     */
   def q213(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q213_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q213_state_$sfx"))
     val ev = t(s, dir, "events")
       .select($"user_id", $"event_id", unix_micros($"ts").as("ts_us"))
     def slice(i: Int) = ev.filter(pmod($"event_id", lit(3)) === i)
@@ -4328,12 +4308,8 @@ object OpsQueries {
     */
   def q214(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q214_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q214_state_$sfx"))
     val docs = t(s, dir, "documents").select($"doc_id", $"text")
     def slice(i: Int) = docs.filter(pmod($"doc_id", lit(3)) === i)
     def feed(batch: DataFrame): Unit =
@@ -4364,12 +4340,8 @@ object OpsQueries {
     */
   def q240(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q240_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q240_state_$sfx"))
     val docs = t(s, dir, "documents").select($"doc_id", $"text")
     def slice(i: Int) = docs.filter(pmod($"doc_id", lit(3)) === i)
     def feed(batch: DataFrame): Unit =
@@ -4415,13 +4387,9 @@ object OpsQueries {
   def q243(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q243_state_$sfx"
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q243_state_$sfx"))
     val (setsT, invT) = (s"graft_q243_sets_$sfx", s"graft_q243_inv_$sfx")
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
     Seq(setsT, invT).foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
     val docs = t(s, dir, "documents").select($"doc_id", $"text")
     def slice(i: Int) = docs.filter(pmod($"doc_id", lit(3)) === i)
@@ -4452,7 +4420,7 @@ object OpsQueries {
     */
   def q215(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"driftref_orders_$sfx"
     val tbl = s"driftref_sketch_$sfx"
     val o = t(s, dir, "orders").select($"o_orderkey", $"o_totalprice")
@@ -4577,12 +4545,8 @@ object OpsQueries {
     */
   def q217(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q217_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q217_state_$sfx"))
     val docs = t(s, dir, "documents")
       .select($"doc_id", $"text".cast("binary").as("bin"))
     val corpus = docs.unionByName(ndFix.toDF("doc_id", "bin"))
@@ -5016,12 +4980,8 @@ object OpsQueries {
     */
   def q241(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q241_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q241_state_$sfx"))
     val docs = t(s, dir, "documents")
       .select($"doc_id", $"text".cast("binary").as("bin"))
     val corpus = docs
@@ -5314,12 +5274,8 @@ object OpsQueries {
     */
   def q236(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q236_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q236_state_$sfx"))
     val docs = t(s, dir, "documents")
     def slice(i: Int) = docs.filter(pmod($"doc_id", lit(3)) === i)
     def feed(batch: DataFrame): Unit =
@@ -5576,7 +5532,7 @@ object OpsQueries {
     */
   private def decontEvalSets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val eT = s"graft_decont_eval_${TrainDefV}_$sfx"
     if (!s.catalog.tableExists(eT)) {
       val (_, test) = decontCorpora(s, dir)
@@ -5662,12 +5618,8 @@ object OpsQueries {
   def q252(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q252_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q252_state_$sfx"))
     val (train, test) = decontCorpora(s, dir)
     val testSets = Dedup.shingleSets(test, "test_id", "text", 3)
       .select($"doc_id".as("test_id"), $"shs")
@@ -5764,7 +5716,7 @@ object OpsQueries {
   def q254(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val p = prep(s, dir)
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val idxT = s"graft_pq_srv104_$sfx"
     val coarseT = s"graft_pq_srv104_coarse_$sfx"
     val cbT = s"graft_pq_srv104_cb_$sfx"
@@ -5971,12 +5923,8 @@ object OpsQueries {
   def q262(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q262_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q262_state_$sfx"))
     val ref = lmRef(s, dir)
     def slice(i: Int) = ref.filter(pmod($"doc_id", lit(3)) === i)
     su.lmCountsBatch(s, slice(0), "doc_id", "text", base, 0L)
@@ -6219,7 +6167,7 @@ object OpsQueries {
     * regression toward retrain-per-call surfaces as a trend.
     */
   def q265(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val wT = s"graft_clf_w_${TrainDefV}_$sfx"
     val rT = s"graft_clf_r_${TrainDefV}_$sfx"
     val corp = spamCorpus(s, dir)
@@ -6318,12 +6266,8 @@ object OpsQueries {
     * incremental dedup stack unchanged.
     */
   def q266(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q266_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q266_state_$sfx"))
     val pairs = graft.ops.Materialize.Local(q23(s, dir))
     def slice(i: Int): DataFrame =
       pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(3)) === i)
@@ -6519,7 +6463,7 @@ object OpsQueries {
     val mat = graft.ops.Materialize.LocalLazy
     val clf = graft.ops.Classify
     val lm = graft.ops.LangModel
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     // TrainDefV in every name: stale-weight protection (see q265)
     val wT = s"graft_clf_w_${TrainDefV}_$sfx"
     val rT = s"graft_clf_r_${TrainDefV}_$sfx"
@@ -6604,10 +6548,7 @@ object OpsQueries {
     */
   private def maintainedSurv3(s: SparkSession, dir: String,
                               stateName: String): DataFrame = {
-    val base = maintainedStateBase(s, dir, stateName)
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val base = freshState(s, maintainedStateBase(s, dir, stateName))
     val surv2 = buildMaintainedStates(s, dir, base)
     serveMaintainedSurv3(s, dir, base, Some(surv2))
   }
@@ -6620,9 +6561,7 @@ object OpsQueries {
     */
   private def maintainedStateBase(s: SparkSession, dir: String,
                                   stateName: String): String =
-    s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_${stateName}_state_${TrainDefV}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    whPath(s, s"graft_${stateName}_state_${TrainDefV}_${sfx(dir)}")
 
   /** The INGEST half of the maintained capstones: classifier counts
     * and LM counts stream in (three mod-3 slices, one partial
@@ -6667,7 +6606,7 @@ object OpsQueries {
     // awaitAllWrites: both chains quiesce before the first failure
     // propagates — an exception must not leave the sibling chain
     // mutating $base in the background (ADVICE r18)
-    su.awaitAllWrites(
+    graft.streaming.VersionedState.awaitAllWrites(
       () => {
         su.clfCountsBatch(s, cslice(0), "doc_id", "label", "text",
           s"$base/clf", 0L)
@@ -7052,12 +6991,8 @@ object OpsQueries {
   def q275(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q275_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q275_state_$sfx"))
     val ref = lmRef(s, dir)
     def slice(i: Int) = ref.filter(pmod($"doc_id", lit(3)) === i)
     su.lmTrigramCountsBatch(s, slice(0), "doc_id", "text", base, 0L)
@@ -7273,7 +7208,7 @@ object OpsQueries {
     import s.implicits._
     val clf = graft.ops.Classify
     val mat = graft.ops.Materialize.LocalLazy
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val wT = s"graft_clf_w_${TrainDefV}_$sfx"
     val rT = s"graft_clf_r_${TrainDefV}_$sfx"
     val tT = s"graft_clf_thr_${TrainDefV}_$sfx"
@@ -7313,17 +7248,7 @@ object OpsQueries {
     */
   def q280(s: SparkSession, dir: String): DataFrame = {
     val base = maintainedStateBase(s, dir, "q280")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val built =
-      if (fs.exists(marker)) None
-      else {
-        val hp = new org.apache.hadoop.fs.Path(base)
-        if (fs.exists(hp)) fs.delete(hp, true) // partial build: restart
-        val surv2 = buildMaintainedStates(s, dir, base)
-        fs.create(marker).close()
-        Some(surv2)
-      }
+    val built = buildOnce(s, base)(buildMaintainedStates(s, dir, base))
     graft.ops.Prep.selectUnderBudgetByGroup(
       serveMaintainedSurv3(s, dir, base, built), "source", "doc_id",
       "score_ppm", "cost", budgetPerGroup = 1200L)
@@ -7690,7 +7615,7 @@ object OpsQueries {
     val clf = graft.ops.Classify
     val lm = graft.ops.LangModel
     val mat = graft.ops.Materialize.LocalLazy
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val wT = s"graft_clf_w_${TrainDefV}_$sfx"
     val rT = s"graft_clf_r_${TrainDefV}_$sfx"
     val uniT = s"graft_lm_uni_${TrainDefV}_$sfx"
@@ -7777,11 +7702,7 @@ object OpsQueries {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
     val ens = graft.ops.Ensemble
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q290_state_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val base = freshState(s, whPath(s, s"graft_q290_state_${sfx(dir)}"))
     val corp = graft.ops.Materialize.LocalLazy(spamCorpus(s, dir))
     val (margins, fl) = ensembleScorers(s, dir, corp)
     def feed(scored: DataFrame, valueCol: String, sub: String): Unit = {
@@ -7986,10 +7907,7 @@ object OpsQueries {
     val surv3 = mat(maintainedSurv3(s, dir, "q296"))
     // the decontamination state: survivors stream against the frozen
     // eval set (delete-per-call like every maintained gate entry)
-    val dbase = maintainedStateBase(s, dir, "q296dc")
-    val dhp = new org.apache.hadoop.fs.Path(dbase)
-    val dfs = dhp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (dfs.exists(dhp)) dfs.delete(dhp, true)
+    val dbase = freshState(s, maintainedStateBase(s, dir, "q296dc"))
     val corp = mat(spamCorpus(s, dir))
     // eval sets from the persisted asset (r19, VERDICT #6) — the
     // same (test_id, shs) shape the streaming protocol takes
@@ -8031,11 +7949,7 @@ object OpsQueries {
   def q294(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val base = maintainedStateBase(s, dir, "q294")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/_BUILT")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      val hp = new org.apache.hadoop.fs.Path(base)
-      if (fs.exists(hp)) fs.delete(hp, true) // partial build: restart
+    buildOnce(s, base) {
       // sealed: the build reads it four times (three segment writes
       // + the selection) — unsealed it re-tokenized the corpus per
       // job (round-18 review, the buildMaintainedStates lesson)
@@ -8052,7 +7966,6 @@ object OpsQueries {
           "source", "doc_id", "score_ppm", "cost",
           budgets.select($"source", $"budget", $"epochs")))
         .write.mode("overwrite").parquet(s"$base/spend")
-      fs.create(marker).close()
     }
     mixtureReport(servedMixtureBudgets(s, base),
       s.read.parquet(s"$base/spend"))
@@ -8110,7 +8023,7 @@ object OpsQueries {
   private def bpeRepriced(s: SparkSession, dir: String,
                           surv: DataFrame, corp: DataFrame): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"bpe_merges_$sfx" // q202/q293's asset — one tokenizer
     if (!s.catalog.tableExists(tbl))
       graft.Tables.writeTable(
@@ -8285,7 +8198,7 @@ object OpsQueries {
     */
   def q293(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val tbl = s"bpe_merges_$sfx" // q202's asset — one tokenizer, shared
     val docs = t(s, dir, "documents")
     if (!s.catalog.tableExists(tbl))
@@ -8415,12 +8328,8 @@ object OpsQueries {
     */
   def q239(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q239_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q239_state_$sfx"))
     val ev = t(s, dir, "events")
       .select($"event_id", $"user_id", $"ts", $"event_type")
     val mm = ev.agg(min(unix_micros($"ts".cast("timestamp"))).as("lo"),
@@ -8456,13 +8365,9 @@ object OpsQueries {
     */
   def q246(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q246_state_$sfx"
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q246_state_$sfx"))
     val closedT = s"graft_q246_closed_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
     s.sql(s"DROP TABLE IF EXISTS `$closedT`")
     val ev = t(s, dir, "events")
       .select($"event_id", $"user_id", $"ts", $"event_type")
@@ -8501,7 +8406,7 @@ object OpsQueries {
     * (q94/q104), not to an oracle-identity serve face.
     */
   def q232(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val (post, dfT, st) = (s"graft_hyb_post_$sfx", s"graft_hyb_df_$sfx",
       s"graft_hyb_stats_$sfx")
     if (!(s.catalog.tableExists(post) && s.catalog.tableExists(dfT) &&
@@ -8530,7 +8435,7 @@ object OpsQueries {
     * CTEs).
     */
   def q238(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val (post, dfT, st) = (s"graft_hyb_post_$sfx", s"graft_hyb_df_$sfx",
       s"graft_hyb_stats_$sfx")
     if (!(s.catalog.tableExists(post) && s.catalog.tableExists(dfT) &&
@@ -8577,7 +8482,7 @@ object OpsQueries {
     */
   def q244(s: SparkSession, dir: String): DataFrame = {
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val p = prep(s, dir)
     val q7 = p.filter(col("vec_id") === 7L)
     val cb = Similarity.pqCodebooks(p, m = 8, dims = 64, stride = 25L)
@@ -8587,11 +8492,7 @@ object OpsQueries {
     val pqBase = s"$wh/graft_q244_pq_$sfx"
     val (postT, statsT, idxT) = (s"graft_q244_post_$sfx",
       s"graft_q244_stats_$sfx", s"graft_q244_pqidx_$sfx")
-    Seq(bmBase, pqBase).foreach { b =>
-      val hp = new org.apache.hadoop.fs.Path(b)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.delete(hp, true)
-    }
+    Seq(bmBase, pqBase).foreach(freshState(s, _))
     Seq(postT, statsT, idxT).foreach(tb =>
       s.sql(s"DROP TABLE IF EXISTS `$tb`"))
     // lexical: two slices -> compact -> third slice as delta
@@ -8636,7 +8537,7 @@ object OpsQueries {
     */
   def q245(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val (post, dfT, st) = (s"graft_hyb_post_$sfx", s"graft_hyb_df_$sfx",
       s"graft_hyb_stats_$sfx")
     if (!(s.catalog.tableExists(post) && s.catalog.tableExists(dfT) &&
@@ -8775,7 +8676,7 @@ object OpsQueries {
     */
   def q230(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val sfx = OpsQueries.sfx(dir)
     val base = s"winsref_lineitem_$sfx"
     val tbl = s"winsref_sketch_$sfx"
     val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_linenumber",
@@ -9144,13 +9045,9 @@ object OpsQueries {
   def q249(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val su = graft.streaming.StreamingUpsert
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q249_state_$sfx"
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q249_state_$sfx"))
     val (setsT, invT) = (s"graft_q249_sets_$sfx", s"graft_q249_inv_$sfx")
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
     Seq(setsT, invT).foreach(tb => s.sql(s"DROP TABLE IF EXISTS `$tb`"))
     val docs = t(s, dir, "documents")
       .select($"doc_id", $"text".cast("binary").as("bin"))
@@ -9176,12 +9073,8 @@ object OpsQueries {
 
   def q223(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q223_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q223_state_$sfx"))
     val docs = t(s, dir, "documents")
       .select($"doc_id", $"text".cast("binary").as("bin"))
     val corpus = docs.unionByName(vidFix.toDF("doc_id", "bin"))
@@ -9218,12 +9111,8 @@ object OpsQueries {
     */
   def q221(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s.conf.get("spark.sql.warehouse.dir") +
-      s"/graft_q221_state_$sfx"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) fs.delete(hp, true)
+    val sfx = OpsQueries.sfx(dir)
+    val base = freshState(s, whPath(s, s"graft_q221_state_$sfx"))
     val docs = t(s, dir, "documents")
       .select($"doc_id", $"text".cast("binary").as("bin"))
     val corpus = docs.unionByName(audNdFix.toDF("doc_id", "bin"))

@@ -28,8 +28,10 @@ import scala.jdk.CollectionConverters._
   *
   *  - a version token other than the current
   *    [[graft.queries.OpsQueries.TrainDefV]] in the `_dNN__<sfx>`
-  *    position — ANCHORED at the double-underscore dataset-suffix
-  *    boundary every versioned writer produces (`..._d16__root_...`),
+  *    position, where `<sfx>` is [[graft.queries.OpsQueries.sfx]] of
+  *    the dataset path — ANCHORED at the double-underscore
+  *    dataset-suffix boundary every versioned writer produces
+  *    (`..._d16__root_...`),
   *    so `d<digits>` appearing inside a dataset PATH (`/mnt/d5/sf1`
   *    → sfx `_mnt_d5_sf1`) can never classify a live asset stale;
   *  - legacy `graft_*_state_*` entries with NO version token (the
