@@ -7,9 +7,13 @@ import scala.util.control.NonFatal
   *
   * Each query is forced end-to-end with a noop datasource write (full
   * materialization of every output row/column — unlike count(), which
-  * lets Spark prune the plan). One untimed warmup run amortizes JIT +
-  * codegen + parquet footer reads, mirroring steady-state service
-  * behavior rather than cold JVM start.
+  * lets Spark prune the plan). One untimed warmup run warms the JIT,
+  * fills the generated-code cache and pins each input file's schema
+  * (Tables.load), mirroring steady-state service behavior rather than
+  * cold JVM start. The codegen part holds only while that cache
+  * (LocalSession's spark.sql.codegen.cache.maxEntries) fits every
+  * entry's classes: at Spark's default of 100 the 40 round-robin
+  * entries overflow it and every timed repetition recompiles.
   *
   * Contention-evidence (VERDICT r9 #1: two consecutive rounds of
   * official numbers were poisoned by box load — 4-24x phantom

@@ -129,12 +129,6 @@ object Search {
     csv.split(",").map(_.trim.toLowerCase(java.util.Locale.ROOT))
       .filter(_.nonEmpty).toSeq
 
-  /** F13 as a Column expression, for CSV values arriving in a column
-    * rather than as a literal query.
-    */
-  def splitClausesCol(c: Column): Column =
-    filter(transform(split(c, ","), x => lower(trim(x))), x => x =!= "")
-
   /** The classic search entry point (app/main.py:88-97): multi_match
     * with AUTO fuzziness over name / ingredients_text / steps_text,
     * integer score = matched-query-token count summed over the three

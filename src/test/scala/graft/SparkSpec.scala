@@ -3,16 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM — Test/fork). */
+/** Shared local SparkSession for all suites (one JVM — Test/fork),
+  * built like every engine session so the suites run under the same
+  * conf (static ones included) as Verify, Bench and perfbench.
+  */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession.build("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,11 +1,14 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.functions._
 
 /** Asset-table write safety: the stage-then-swap contract (ADVICE r5)
   * — a failed replacement write must leave the previous version
   * registered and readable, and a successful one must atomically-ish
-  * swap while keeping the bucket spec.
+  * swap while keeping the bucket spec. Also `load`'s pinned schemas:
+  * inferred once per file version and inference conf set.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
@@ -76,6 +79,127 @@ class TablesSpec extends SparkSpec {
     assert(spark.table("tables_spec_plain").as[(Long, Long)]
       .collect().toSeq === Seq((10L, 20L)))
     spark.sql("DROP TABLE IF EXISTS tables_spec_plain")
+  }
+
+  /** Spark jobs `body` submits, counted by a listener. The listener bus
+    * is asynchronous: a marker job submitted afterwards is awaited, and
+    * the bus delivers in order, so every job of `body` has been seen by
+    * then.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"tables_spec_${System.nanoTime()}"
+    val marker = group + "_marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "jobsDuring marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener bus did not deliver the marker")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Writes `df` as ONE parquet file at `$dir/$name.parquet` (the test
+    * data layout), replacing any file there.
+    */
+  private def writeFile(df: org.apache.spark.sql.DataFrame, dir: File,
+                        name: String): Unit = {
+    val tmp = new File(dir, s"_tmp_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+    val part = tmp.listFiles.filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, new File(dir, s"$name.parquet").toPath,
+      StandardCopyOption.REPLACE_EXISTING)
+    deleteTree(tmp)
+  }
+
+  private def deleteTree(f: File): Unit = {
+    Option(f.listFiles).toSeq.flatten.foreach(deleteTree)
+    f.delete()
+  }
+
+  private def withDir(body: File => Unit): Unit = {
+    val d = Files.createTempDirectory("tables_spec_pin").toFile
+    try body(d) finally deleteTree(d)
+  }
+
+  test("load: a second load of an unchanged file runs no job and keeps the schema") {
+    withDir { d =>
+      writeFile(Seq((1L, "a", 2.5)).toDF("k", "v", "x"), d, "t")
+      var first, second: org.apache.spark.sql.types.StructType = null
+      val inferJobs = jobsDuring { first = Tables.load(spark, d.getPath, "t").schema }
+      assert(inferJobs >= 1, "the first load infers (footer job)")
+      val pinnedJobs = jobsDuring { second = Tables.load(spark, d.getPath, "t").schema }
+      assert(pinnedJobs === 0)
+      assert(second === first)
+      assert(Tables.load(spark, d.getPath, "t").as[(Long, String, Double)]
+        .collect().toSeq === Seq((1L, "a", 2.5)))
+    }
+  }
+
+  test("load: a file rewritten in place with another schema is inferred again") {
+    withDir { d =>
+      writeFile(Seq((1L, "a")).toDF("k", "v"), d, "t")
+      assert(Tables.load(spark, d.getPath, "t").columns.toSeq === Seq("k", "v"))
+      writeFile(Seq((2L, 3.5, 4)).toDF("k", "x", "n"), d, "t")
+      var cols: Seq[String] = Nil
+      assert(jobsDuring {
+        cols = Tables.load(spark, d.getPath, "t").columns.toSeq
+      } >= 1)
+      assert(cols === Seq("k", "x", "n"))
+      assert(Tables.load(spark, d.getPath, "t").as[(Long, Double, Int)]
+        .collect().toSeq === Seq((2L, 3.5, 4)))
+    }
+  }
+
+  test("load: a session with different parquet-inference confs infers for itself") {
+    withDir { d =>
+      // a plain BINARY column and no Spark schema in the footer (the
+      // test data's shape), so binaryAsString decides its type
+      val schema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType("message t { required int64 k; required binary b; }")
+      val hconf = new org.apache.hadoop.conf.Configuration()
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new File(d, "t.parquet").getPath), hconf))
+        .withType(schema).withConf(hconf).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        .newGroup().append("k", 1L)
+        .append("b", org.apache.parquet.io.api.Binary.fromString("hi")))
+      finally w.close()
+      val base = Tables.load(spark, d.getPath, "t").schema("b").dataType
+      assert(base === org.apache.spark.sql.types.BinaryType)
+      val other = spark.newSession()
+      other.conf.set("spark.sql.parquet.binaryAsString", "true")
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { df = Tables.load(other, d.getPath, "t") } >= 1)
+      assert(df.schema("b").dataType === org.apache.spark.sql.types.StringType)
+      assert(df.select("b").head().getString(0) === "hi")
+      // and the base session still reads its own pinned schema
+      assert(jobsDuring {
+        assert(Tables.load(spark, d.getPath, "t").schema("b").dataType ===
+          org.apache.spark.sql.types.BinaryType)
+      } === 0)
+    }
+  }
+
+  test("load: a directory path keeps the inferring read") {
+    withDir { d =>
+      Seq((1L, "a")).toDF("k", "v").write.parquet(new File(d, "t.parquet").getPath)
+      for (_ <- 1 to 2)
+        assert(jobsDuring { Tables.load(spark, d.getPath, "t").schema } >= 1)
+    }
   }
 
   test("writePartitioned: partitions live after the swap, pruned reads, rewrite survives") {
