@@ -1,9 +1,17 @@
 package graft
 package ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -854,7 +862,7 @@ object Similarity {
     topKByCos(pqAdcScores(codes, queries, codebooks, m, dims), k)
 
   /** [[knnPqOnCodes]] WITHOUT the final top-k — the flat-PQ member of
-    * the scorer family ([[ivfAdcScores]]/[[residualAdcScores]]), for
+    * the join-form scorer family (with [[residualAdcScores]]), for
     * the compacted-state serve's table+delta merge.
     */
   private[graft] def pqAdcScores(codes: DataFrame, queries: DataFrame,
@@ -1014,14 +1022,312 @@ object Similarity {
     coarseAssign(corpus, broadcast(coarse))
       .join(pqEncode(corpus, codebooks, m, dims), Seq("vec_id"))
 
+  // ------------------------------------------ served IVF-PQ (index)
+  //
+  // The persisted-index serve runs as three round trips and no
+  // shuffle. (1) The small operands — query vectors, coarse centroids,
+  // codebooks — are collected to the driver, which picks each query's
+  // `nProbe` lists and builds its ADC lookup table. (2) ONE scan stage
+  // reads the index filtered to the probed lists (bucket pruning
+  // applies), scores each row against the queries that probe its list
+  // and keeps a bounded per-query top list per partition; the driver
+  // merges the partition lists. (3) The re-rank fetches only the
+  // shortlisted vectors and ranks them exactly. Every number comes
+  // from the inline plans' arithmetic — the qdot kernel's own eval
+  // (ShingleUtil.qdot), the [[cosine]] rule, [[topKByCos]]'s
+  // (cos desc, id asc) order under Spark's double ordering — so the
+  // served results equal [[knnIvfPq]] / [[knnIvfPqRerank]] exactly
+  // (SimilaritySpec), in four jobs per request and no shuffle.
+  //
+  // The served functions therefore run their jobs when CALLED and
+  // return a local DataFrame (query_id, neighbor_id, cos_sim, rank).
+  // Driver traffic is O(queries × (nLists·dims + m·ksub)) operands in,
+  // O(partitions × queries × shortlist) candidates back — the volume
+  // the broadcasts of the join form shipped. Query, centroid, codebook
+  // and corpus vectors must agree in length (a mismatch fails the
+  // call; the inline plans would rank such rows as NULL) and query
+  // ids must be distinct.
+
+  /** A vector resolved on the driver: id, quantized components (as
+    * the qdot kernel's ArrayData) and squared norm.
+    */
+  private final case class DVec(id: Long, qv: ArrayData, n2: Long)
+
+  /** (id, quantized vector, squared norm) from the three columns named. */
+  private def vecRows(df: DataFrame, id: String, qv: String,
+                      n2: String): DataFrame =
+    df.select(col(id).cast("long"), col(qv).cast("array<bigint>"),
+      col(n2).cast("long"))
+
+  /** The [[vecRows]] frame collected to the driver. */
+  private def collectVecs(rows: DataFrame): Array[DVec] =
+    rows.collect().map { r =>
+      require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
+        s"NULL in a served vector row: $r")
+      DVec(r.getLong(0),
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](1).toArray),
+        r.getLong(2))
+    }
+
+  /** The qdot kernel's eval (the same code the compiled plans call). */
+  private def dot(a: ArrayData, b: ArrayData): Long = {
+    val d = org.apache.spark.sql.graftnative.ShingleUtil.qdot(a, b)
+    require(d != null, s"vector length mismatch: ${a.numElements()} vs " +
+      s"${b.numElements()} components (or a NULL component)")
+    d.longValue
+  }
+
+  /** [[cosine]] on the driver: the same IEEE operations, same order. */
+  private def cosineEval(dot: Long, na2: Long, nb2: Long): Double =
+    if (na2 == 0L || nb2 == 0L) 0.0
+    else dot.toDouble / (math.sqrt(na2.toDouble) * math.sqrt(nb2.toDouble))
+
+  /** [[topKByCos]]'s order over (neighbor_id, cos_sim): cos desc under
+    * Spark's double ordering (-0.0 equals 0.0, NaN largest), id asc.
+    */
+  private val byCos: Ordering[(Long, Double)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** The best `depth` (neighbor_id, cos_sim) pairs offered, one per
+    * neighbor: a neighbor offered twice keeps its larger cos (the
+    * max-per-(query, neighbor) merge of table and delta rows). Exact
+    * for any split of the offers: a pair in the global top-`depth` is
+    * in the top-`depth` of every subset that contains it.
+    */
+  private final class TopList(depth: Int) {
+    private val ranked = new java.util.TreeSet[(Long, Double)](byCos)
+    private val best = scala.collection.mutable.HashMap[Long, Double]()
+    def offer(id: Long, cos: Double): Unit = {
+      val prev = best.get(id)
+      if (prev.forall(c => SQLOrderingUtil.compareDoubles(c, cos) < 0)) {
+        prev.foreach(c => ranked.remove((id, c)))
+        ranked.add((id, cos))
+        best(id) = cos
+        if (ranked.size > depth) best.remove(ranked.pollLast()._1)
+      }
+    }
+    def result: Seq[(Long, Double)] = ranked.asScala.toSeq
+  }
+
+  /** `df` filtered to `ids` in its long column `name` through an
+    * InSet ([[graft.plans.Native.longInSet]]): one compiled class for
+    * every id set, bucket pruning and parquet pushdown kept.
+    */
+  private def whereIdIn(df: DataFrame, name: String,
+                        ids: Iterable[Long]): DataFrame = {
+    val c = if (df.schema(name).dataType == LongType) col(name)
+      else col(name).cast("long")
+    df.filter(graft.plans.Native.longInSet(c, ids))
+  }
+
+  /** The driver-resolved operands of one serve call: per query its
+    * probe lists and ADC table — `pdot(q)(j)(e)` is the exact int64
+    * q_sub_j · c(j, e), `cn2(j)(e)` the entry's subnorm, `entry(j)`
+    * maps subspace j's codebook cent_id to e.
+    */
+  private final class AdcOperands(val qs: Array[DVec],
+                                  val probesOf: Map[Long, Array[Int]],
+                                  val entry: Array[Map[Long, Int]],
+                                  val pdot: Array[Array[Array[Long]]],
+                                  val cn2: Array[Array[Long]])
+      extends Serializable {
+
+    /** One scan partition's (query index, neighbor_id, cos_sim)
+      * bounded top lists over (vec_id, cent_id, codes) rows — the
+      * inline ADC: per-subspace LUT lookups summed as exact int64
+      * (a code without a codebook entry contributes nothing, as the
+      * inner LUT join drops it), self-matches excluded.
+      */
+    def scorePartition(rows: Iterator[InternalRow],
+                       depth: Int): Iterator[(Int, Long, Double)] = {
+      val tops = Array.fill(qs.length)(new TopList(depth))
+      val m = entry.length
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+          probesOf.get(r.getLong(1)).foreach { probing =>
+            val vid = r.getLong(0)
+            val codes = r.getArray(2)
+            // (subspace, entry) of every code with a codebook entry
+            val hits = (0 until math.min(codes.numElements(), m)).flatMap(j =>
+              if (codes.isNullAt(j)) None
+              else entry(j).get(codes.getLong(j)).map(e => (j, e)))
+            def sum(v: (Int, Int) => Long) =
+              hits.foldLeft(0L) { case (a, (j, e)) => Math.addExact(a, v(j, e)) }
+            if (hits.nonEmpty) {
+              val rn2 = sum((j, e) => cn2(j)(e))
+              probing.foreach { qi =>
+                val q = qs(qi)
+                if (q.id != vid)
+                  tops(qi).offer(vid,
+                    cosineEval(sum((j, e) => pdot(qi)(j)(e)), rn2, q.n2))
+              }
+            }
+          }
+      }
+      tops.iterator.zipWithIndex.flatMap {
+        case (t, qi) => t.result.map { case (id, c) => (qi, id, c) }
+      }
+    }
+  }
+
+  /** Step 1: collect the operands (the two quantizer tables
+    * concurrently — the helper thread inherits the caller's Spark
+    * local properties), pick each query's `nProbe` lists by
+    * [[probeLists]]' rule and build its ADC table by [[pqLut]]'s.
+    */
+  private def adcOperands(queries: DataFrame, coarse: DataFrame,
+                          codebooks: DataFrame, m: Int, dims: Int,
+                          nProbe: Int): AdcOperands = {
+    require(m >= 1 && dims % m == 0,
+      s"m must divide dims, got m=$m dims=$dims")
+    val dsub = dims / m
+    val qFrame = vecRows(queries, "vec_id", "qv", "n2")
+    val cFrame = vecRows(coarse, "cent_id", "c_qv", "c_n2")
+    val cbFrame = codebooks.select(col("sub_id").cast("long"),
+      col("cent_id").cast("long"), col("c_sub").cast("array<bigint>"),
+      col("c_n2").cast("long"))
+    // plan all three before going concurrent: operands built over one
+    // local relation share expression objects, and the optimizer
+    // evaluates their interpreted lambda variables (quantize's
+    // transform) in place, so planning on two threads at once
+    // corrupts rows
+    Seq(qFrame, cFrame, cbFrame).foreach(_.queryExecution.executedPlan)
+    val cbTask = new java.util.concurrent.FutureTask[Array[Row]](() =>
+      cbFrame.collect())
+    val cbThread = new Thread(cbTask, "graft-ivfpq-codebooks")
+    cbThread.setDaemon(true)
+    cbThread.start()
+    val qs = collectVecs(qFrame)
+    val cents = collectVecs(cFrame)
+    val cbRows =
+      try cbTask.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    require(qs.map(_.id).distinct.length == qs.length,
+      "served IVF-PQ needs distinct query vec_ids")
+    val probesOf = qs.indices
+      .flatMap { qi =>
+        val q = qs(qi)
+        cents.map(c => (c.id, cosineEval(dot(q.qv, c.qv), q.n2, c.n2)))
+          .sorted(byCos).take(nProbe).map { case (cid, _) => (cid, qi) }
+      }
+      .groupBy(_._1).map { case (cid, qis) => cid -> qis.map(_._2).toArray }
+    val bySub = cbRows.filter(r => !r.isNullAt(0) && r.getLong(0) >= 1L &&
+        r.getLong(0) <= m.toLong)
+      .groupBy(_.getLong(0).toInt - 1)
+    val subs = (0 until m).map(j => bySub.getOrElse(j, Array.empty[Row]))
+    val entry = subs.map { rows =>
+      val ids = rows.map(_.getLong(1))
+      require(ids.distinct.length == ids.length,
+        "codebook has a duplicated (sub_id, cent_id) entry")
+      ids.zipWithIndex.toMap
+    }.toArray
+    val cn2 = subs.map(_.map(_.getLong(3))).toArray
+    val cSub = subs.map(_.map(r =>
+      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Long](2).toArray))).toArray
+    val pdot = qs.map { q =>
+      val v = q.qv.toLongArray()
+      Array.tabulate(m) { j =>
+        val qSub = UnsafeArrayData.fromPrimitiveArray(
+          v.slice(j * dsub, j * dsub + dsub))
+        cSub(j).map(c => dot(qSub, c))
+      }
+    }
+    new AdcOperands(qs, probesOf, entry, pdot, cn2)
+  }
+
+  /** Step 2: the ADC top-`depth` of every query over the probed lists
+    * of `idx` — one scan stage, merged on the driver. Returns the
+    * ranked (neighbor_id, cos_sim) lists in query order.
+    */
+  private def adcTop(ops: AdcOperands, idx: DataFrame,
+                     depth: Int): Array[Seq[(Long, Double)]] = {
+    val merged = Array.fill(ops.qs.length)(new TopList(depth))
+    if (ops.probesOf.nonEmpty) {
+      val scan = whereIdIn(idx, "cent_id", ops.probesOf.keys)
+        .select(col("vec_id").cast("long"), col("cent_id").cast("long"),
+          col("codes").cast("array<bigint>"))
+      val qe = scan.queryExecution
+      val parts = SQLExecution.withNewExecutionId(qe, Some(ScanExecution)) {
+        qe.toRdd.mapPartitions(rows => ops.scorePartition(rows, depth))
+          .collect()
+      }
+      parts.foreach { case (qi, id, c) => merged(qi).offer(id, c) }
+    }
+    merged.map(_.result)
+  }
+
+  /** The SQL execution name of the served scan (step 2). */
+  private[graft] val ScanExecution = "graft.ivfpq.scan"
+
+  /** The QueryExecutions of the served scans that `body` runs — what
+    * plan tests and audits read, since a served result is a local
+    * frame. Waits (up to 30 s) for the listener bus to deliver one.
+    */
+  private[graft] def servedScans(spark: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Seq[QueryExecution] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (name == ScanExecution) got.add(qe)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (got.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      got.asScala.toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  private val rankedSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("cos_sim", DoubleType, nullable = false),
+    StructField("rank", LongType, nullable = false)))
+
+  /** Ranked lists as the (query_id, neighbor_id, cos_sim, rank) frame
+    * [[topKByCos]] returns.
+    */
+  private def rankedFrame(spark: org.apache.spark.sql.SparkSession,
+                          qs: Array[DVec],
+                          lists: Array[Seq[(Long, Double)]]): DataFrame = {
+    val rows = qs.indices.flatMap { qi =>
+      lists(qi).zipWithIndex.map { case ((id, c), i) =>
+        Row(qs(qi).id, id, c, i + 1L)
+      }
+    }
+    spark.createDataFrame(rows.asJava, rankedSchema)
+  }
+
+  /** Step 3: exact re-rank of each query's shortlist, fetching only
+    * the shortlisted vectors of `corpus` (by [[exactScores]]' rule).
+    */
+  private def rerankShortlists(corpus: DataFrame, ops: AdcOperands,
+                               shortlists: Array[Seq[(Long, Double)]],
+                               k: Int): DataFrame = {
+    val ids = shortlists.iterator.flatMap(_.map(_._1)).toSet
+    val fetched =
+      if (ids.isEmpty) Map.empty[Long, Array[DVec]]
+      else collectVecs(vecRows(whereIdIn(corpus, "vec_id", ids), "vec_id",
+        "qv", "n2")).groupBy(_.id)
+    val ranked = ops.qs.zip(shortlists).map { case (q, sl) =>
+      sl.flatMap { case (id, _) =>
+        fetched.getOrElse(id, Array.empty[DVec]).toSeq.map(v =>
+          (id, cosineEval(dot(v.qv, q.qv), v.n2, q.n2)))
+      }.sorted(byCos).take(k)
+    }
+    rankedFrame(corpus.sparkSession, ops.qs, ranked)
+  }
+
   /** IVF-PQ top-k over an index persisted by [[writePqIndex]] —
     * result-identical to [[knnIvfPq]] (same coarse rule, same codes;
-    * q94 proves it against q91's oracle) with the production serving
-    * economics: per-query cost is broadcast probes → equi-join on
-    * cent_id against the codes table → ADC, so the scanned bytes are
-    * probes × list rows × code width. No corpus scan, no encode, no
-    * raw-vector read at query time (PlanSpec asserts the scan reads
-    * only vec_id/cent_id/codes and the probe join broadcasts).
+    * q94 proves it against q91's oracle), served in the three round
+    * trips above: the scan reads only the probed lists' vec_id /
+    * cent_id / codes (PlanSpec pins it: bucket-pruned, no Exchange),
+    * never a raw vector. Runs its jobs when called.
     */
   def knnIvfPqOnIndex(spark: org.apache.spark.sql.SparkSession,
                       indexTable: String, queries: DataFrame,
@@ -1031,50 +1337,41 @@ object Similarity {
       m, dims, k, nProbe)
 
   /** [[knnIvfPqOnIndex]] over an explicit (vec_id, cent_id, codes)
-    * DataFrame — the same serve plan for index rows that are not a
-    * catalog table, e.g. the incrementally accumulated state of
-    * [[graft.streaming.StreamingUpsert.pqIndexFromState]].
+    * DataFrame — the same serve for index rows that are not a catalog
+    * table, e.g. [[graft.streaming.StreamingUpsert.pqIndexFromState]]
+    * or the compacted table ∪ delta of
+    * [[graft.streaming.StreamingUpsert.pqIndexServe]]: a vec_id found
+    * in several rows keeps its best cos. Runs its jobs when called.
     */
   def knnIvfPqOnCodes(idx: DataFrame, queries: DataFrame,
                       coarse: DataFrame, codebooks: DataFrame,
-                      m: Int, dims: Int, k: Int, nProbe: Int): DataFrame =
-    topKByCos(
-      ivfAdcScores(idx, queries, coarse, codebooks, m, dims, nProbe), k)
-
-  /** [[knnIvfPqOnCodes]] WITHOUT the final top-k — every probed
-    * candidate's ADC cosine. The compacted-state serve scores the
-    * bucketed index table and the uncompacted delta with two calls
-    * and max-merges the candidate-sized frames before ranking
-    * ([[graft.streaming.StreamingUpsert.pqIndexServe]]).
-    */
-  private[graft] def ivfAdcScores(idx: DataFrame, queries: DataFrame,
-                                  coarse: DataFrame, codebooks: DataFrame,
-                                  m: Int, dims: Int,
-                                  nProbe: Int): DataFrame = {
-    val probes = probeLists(queries, broadcast(coarse), nProbe)
-    val codeRows = idx
-      .join(broadcast(probes), Seq("cent_id"))
-      .select($"vec_id", $"query_id", posexplode($"codes"))
-      .select($"vec_id", $"query_id",
-        ($"pos" + 1).cast("long").as("sub_id"), $"col".as("cent_id"))
-    adcScores(codeRows, pqLut(queries, codebooks, m, dims))
+                      m: Int, dims: Int, k: Int, nProbe: Int): DataFrame = {
+    val ops = adcOperands(queries, coarse, codebooks, m, dims, nProbe)
+    rankedFrame(queries.sparkSession, ops.qs, adcTop(ops, idx, k))
   }
 
-  /** [[knnIvfPqRerank]] served from the persisted index: ADC
-    * shortlist from [[knnIvfPqOnIndex]], exact re-rank fetching full
-    * vectors for ONLY the queries × shortlist winners.
+  /** [[knnIvfPqRerank]] served from the persisted index: the ADC
+    * shortlist of [[knnIvfPqOnIndex]], then an exact re-rank that
+    * fetches full vectors for ONLY the queries × shortlist winners.
+    * Runs its jobs when called.
     */
   def knnIvfPqRerankOnIndex(spark: org.apache.spark.sql.SparkSession,
                             indexTable: String, corpus: DataFrame,
                             queries: DataFrame, coarse: DataFrame,
                             codebooks: DataFrame, m: Int, dims: Int,
                             k: Int, nProbe: Int,
-                            shortlist: Int): DataFrame = {
+                            shortlist: Int): DataFrame =
+    servedRerank(spark.table(indexTable), corpus, queries, coarse,
+      codebooks, m, dims, k, nProbe, shortlist)
+
+  private def servedRerank(idx: DataFrame, corpus: DataFrame,
+                           queries: DataFrame, coarse: DataFrame,
+                           codebooks: DataFrame, m: Int, dims: Int,
+                           k: Int, nProbe: Int,
+                           shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist must be >= k, got $shortlist < $k")
-    val cand = knnIvfPqOnIndex(spark, indexTable, queries, coarse,
-        codebooks, m, dims, shortlist, nProbe)
-      .select($"query_id", $"neighbor_id")
-    rerankExact(cand, corpus, queries, k)
+    val ops = adcOperands(queries, coarse, codebooks, m, dims, nProbe)
+    rerankShortlists(corpus, ops, adcTop(ops, idx, shortlist), k)
   }
 
   /** FILTERED vector search — the "metadata predicate + kNN" serve
@@ -1083,40 +1380,35 @@ object Similarity {
     * the vectors in `allowed` (the ids surviving a metadata
     * predicate — at scale, a pushed-down scan of the metadata table).
     *
-    * PRE-filter semantics: the candidate code rows are restricted by a
-    * semi-join on vec_id BEFORE probe selection and ADC ranking, so
-    * the shortlist spends its whole budget on eligible vectors and the
-    * filter is EXACT (a non-allowed id can never appear). The
-    * alternative — post-filtering an unfiltered top-k — silently
-    * returns fewer than k rows and loses recall as selectivity grows
-    * (at 1% selectivity an unfiltered top-50 shortlist expects ~0.5
-    * eligible survivors); SimilaritySpec measures that collapse
-    * against this form. The price of pre-filtering is the usual IVF
-    * caveat: a highly selective predicate thins every probed list, so
-    * recall at fixed nProbe degrades toward brute-force-on-survivors —
-    * raise nProbe with selectivity (the FAISS guidance; the q139 audit
-    * pins recall vs FILTERED brute force at the gate parameters).
+    * PRE-filter semantics: the scanned code rows are restricted by a
+    * semi-join on vec_id BEFORE ADC ranking, so the shortlist spends
+    * its whole budget on eligible vectors and the filter is EXACT (a
+    * non-allowed id can never appear). The alternative —
+    * post-filtering an unfiltered top-k — silently returns fewer than
+    * k rows and loses recall as selectivity grows (at 1% selectivity
+    * an unfiltered top-50 shortlist expects ~0.5 eligible survivors);
+    * SimilaritySpec measures that collapse against this form. The
+    * price of pre-filtering is the usual IVF caveat: a highly
+    * selective predicate thins every probed list, so recall at fixed
+    * nProbe degrades toward brute-force-on-survivors — raise nProbe
+    * with selectivity (the FAISS guidance; the q139 audit pins recall
+    * vs FILTERED brute force at the gate parameters).
     *
-    * Scale shape: identical to [[knnIvfPqRerankOnIndex]] plus one
-    * vec_id semi-join on the bucketed codes table (AQE broadcasts the
+    * Scale shape: [[knnIvfPqRerankOnIndex]]'s three round trips with
+    * the vec_id semi-join inside the scan stage (AQE broadcasts the
     * allowed side when small); the exact re-rank fetches full vectors
     * for queries × shortlist survivors only, all of them eligible.
+    * Runs its jobs when called.
     */
   def knnIvfPqRerankFiltered(spark: org.apache.spark.sql.SparkSession,
                              indexTable: String, corpus: DataFrame,
                              queries: DataFrame, coarse: DataFrame,
                              codebooks: DataFrame, m: Int, dims: Int,
                              k: Int, nProbe: Int, shortlist: Int,
-                             allowed: DataFrame): DataFrame = {
-    require(shortlist >= k, s"shortlist must be >= k, got $shortlist < $k")
-    val idx = spark.table(indexTable)
-      .join(allowed.select($"vec_id"), Seq("vec_id"), "left_semi")
-    val cand = topKByCos(
-        ivfAdcScores(idx, queries, coarse, codebooks, m, dims, nProbe),
-        shortlist)
-      .select($"query_id", $"neighbor_id")
-    rerankExact(cand, corpus, queries, k)
-  }
+                             allowed: DataFrame): DataFrame =
+    servedRerank(spark.table(indexTable)
+        .join(allowed.select($"vec_id"), Seq("vec_id"), "left_semi"),
+      corpus, queries, coarse, codebooks, m, dims, k, nProbe, shortlist)
 
   // ------------------------------------------------ residual encoding
 
@@ -1269,9 +1561,10 @@ object Similarity {
     * is x̂ = c + r̂, so q·x̂ = qc_dot + Σ_j q_sub·r̂_sub (probe table +
     * LUT) and ‖x̂‖² = ‖c‖² + 2·Σ_j c_sub·r̂_sub + Σ_j ‖r̂_sub‖² (cross
     * table + LUT) — every term an exact int64 lookup, cosine taken
-    * once in double at the end. Per-query cost is identical in shape
-    * to [[knnIvfPqOnCodes]]: broadcast probes → equi-join on the list
-    * id against the codes table → ADC over m codes per candidate; the
+    * once in double at the end. Per-query shape: broadcast probes →
+    * equi-join on the list id against the codes table → ADC over m
+    * codes per candidate (the join form; the plain family's
+    * [[knnIvfPqOnCodes]] resolves probes on the driver instead); the
     * raw vector column is never read. The two extra joins (qc_dot,
     * cross) are against broadcast tables of probe/codebook size.
     */
@@ -1282,9 +1575,8 @@ object Similarity {
     topKByCos(
       residualAdcScores(idx, queries, coarse, rcb, m, dims, nProbe), k)
 
-  /** [[knnIvfPqResidualOnCodes]] WITHOUT the final top-k — the
-    * residual twin of [[ivfAdcScores]], for the compacted-state
-    * serve's index+delta merge.
+  /** [[knnIvfPqResidualOnCodes]] WITHOUT the final top-k, for the
+    * compacted-state serve's index+delta merge.
     */
   private[graft] def residualAdcScores(idx: DataFrame, queries: DataFrame,
                                        coarse: DataFrame, rcb: DataFrame,
@@ -1439,9 +1731,10 @@ object Similarity {
   }
 
   /** [[thresholdNeighbors]] served from the persisted IVF-PQ index:
-    * ADC shortlist per query from the codes (probes → bucketed
-    * equi-join — no corpus scan), then the exact cosine THRESHOLD
-    * over only the shortlist rows. Approximation is the shortlist
+    * ADC shortlist per query from the codes ([[knnIvfPqOnIndex]]'s
+    * driver-resolved serve — no corpus scan; its jobs run when this
+    * is called), then the exact cosine THRESHOLD over only the
+    * shortlist rows. Approximation is the shortlist
     * bound, stated honestly: a true above-tau neighbor outside the
     * query's ADC top-`shortlist` is missed (raise `shortlist` /
     * `nProbe` with expected match counts — identical-content leaks

@@ -49,6 +49,16 @@ object Native {
     */
   def qdot(a: Column, b: Column): Column = GraftNative.qdot(a, b)
 
+  /** `c IN (values)` as a Catalyst `InSet`: the generated code reads
+    * the set through a reference object, so plans that differ only in
+    * the values share one compiled class, where `isin` with fewer than
+    * `spark.sql.optimizer.inSetConversionThreshold` values inlines
+    * each value and compiles per distinct list. File-source bucket
+    * pruning and parquet filter pushdown accept both forms.
+    */
+  def longInSet(c: Column, values: Iterable[Long]): Column =
+    GraftNative.inSet(c, values.map(v => v: Any).toSet)
+
   /** Random-hyperplane sign-bucket key — identical to the composed
     * `Similarity.signBucket`, with the deterministic md5-derived sign
     * matrix built once per expression instead of per plan literal.

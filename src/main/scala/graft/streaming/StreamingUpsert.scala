@@ -1727,9 +1727,9 @@ object StreamingUpsert {
   }
 
   /** Flat-PQ ADC top-k over compacted-table + delta codes state —
-    * [[pqIndexServe]]'s shape for the [[pqEncodeBatch]] family
+    * [[pqIndexServe]]'s contract for the [[pqEncodeBatch]] family
     * (score both sides, max-merge the value-identical duplicates,
-    * rank once).
+    * rank once), in the join form.
     */
   def pqCodesServe(spark: SparkSession, basePath: String,
                    codesTable: String, queries: DataFrame,
@@ -2088,33 +2088,37 @@ object StreamingUpsert {
     VersionedState.deleteAll(spark, dirs)
   }
 
-  /** Score-with-delta serve core: ADC-score the compacted table and
-    * the (small, distinct'd) uncompacted delta SEPARATELY, max-merge
-    * the two candidate-sized score frames, rank once. A vec_id
-    * present in both — re-delivered after its compaction — scores
-    * value-identically on both sides (frozen quantizers), so max()
-    * dedups exactly; nothing corpus-sized is distinct'd or shuffled
-    * per query. With no delta the plan is the index table's alone —
-    * the zero-Exchange bucketed probe join.
+  /** The serve-side sources of the index state: the compacted table
+    * (if any) and the uncompacted delta, distinct'd ONLY there —
+    * within-delta duplicates (a replay or re-delivery between
+    * compactions) are value-identical and would double the join-form
+    * ADC sums. A vec_id in both sources (re-delivered after its
+    * compaction) scores value-identically on both (frozen
+    * quantizers), so a max per (query, neighbor) dedups exactly;
+    * nothing corpus-sized is distinct'd or shuffled per query.
     */
-  private def servedTopK(spark: SparkSession, basePath: String,
-                         indexTable: String,
-                         score: DataFrame => DataFrame,
-                         k: Int): DataFrame = {
+  private def indexSources(spark: SparkSession, basePath: String,
+                           indexTable: String): Seq[DataFrame] = {
     val dirs = indexDeltaDirs(spark, basePath)
     val hasTable = spark.catalog.tableExists(indexTable)
     require(hasTable || dirs.nonEmpty,
       s"nothing to serve: no table $indexTable and no batch state " +
         s"under $basePath/index")
-    val frames =
-      (if (hasTable) Seq(spark.table(indexTable)) else Nil) ++
-        (if (dirs.nonEmpty)
-          // distinct ONLY the delta: within-delta duplicates (a replay
-          // or re-delivery between compactions) are value-identical
-          // and would double the ADC sums
-          Seq(spark.read.parquet(dirs: _*)
-            .select(col("vec_id"), col("cent_id"), col("codes")).distinct())
-        else Nil)
+    (if (hasTable) Seq(spark.table(indexTable)) else Nil) ++
+      (if (dirs.nonEmpty)
+        Seq(spark.read.parquet(dirs: _*)
+          .select(col("vec_id"), col("cent_id"), col("codes")).distinct())
+      else Nil)
+  }
+
+  /** Join-form score-with-delta serve: score each source separately,
+    * max-merge the candidate-sized score frames, rank once.
+    */
+  private def servedTopK(spark: SparkSession, basePath: String,
+                         indexTable: String,
+                         score: DataFrame => DataFrame,
+                         k: Int): DataFrame = {
+    val frames = indexSources(spark, basePath, indexTable)
     val scored = frames.map(score).reduce(_ unionByName _)
     val merged =
       if (frames.sizeIs == 1) scored
@@ -2127,15 +2131,20 @@ object StreamingUpsert {
     * face of [[incrementalPqIndex]] + [[compactPqIndexState]];
     * result-identical to [[graft.ops.Similarity.knnIvfPqOnCodes]]
     * over the full accumulated index (StreamingUpsertSpec property).
-    * Falls back to pure-delta serving if no compaction has run yet.
+    * Table ∪ delta is scored in ONE driver-resolved scan
+    * ([[graft.ops.Similarity.knnIvfPqOnCodes]] keeps the max per
+    * (query, neighbor)); with no delta the scan is the index table's
+    * alone, bucket-pruned to the probed lists. Falls back to
+    * pure-delta serving if no compaction has run yet. Runs its jobs
+    * when called.
     */
   def pqIndexServe(spark: SparkSession, basePath: String,
                    indexTable: String, queries: DataFrame,
                    coarse: DataFrame, codebooks: DataFrame,
                    m: Int, dims: Int, k: Int, nProbe: Int): DataFrame =
-    servedTopK(spark, basePath, indexTable,
-      idx => graft.ops.Similarity.ivfAdcScores(idx, queries, coarse,
-        codebooks, m, dims, nProbe), k)
+    graft.ops.Similarity.knnIvfPqOnCodes(
+      indexSources(spark, basePath, indexTable).reduce(_ unionByName _),
+      queries, coarse, codebooks, m, dims, k, nProbe)
 
   /** [[pqIndexServe]] for the residual (`by_residual`) index family —
     * the serving face of [[incrementalPqResidualIndex]] +

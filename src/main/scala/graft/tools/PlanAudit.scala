@@ -19,6 +19,10 @@ object PlanAudit {
 
     def fmt(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    // a served IVF-PQ result is a local frame: audit the scan it ran
+    def fmtServedScan(serve: => org.apache.spark.sql.DataFrame): String =
+      graft.ops.Similarity.servedScans(spark)(serve).map(
+        _.explainString(ExplainMode.fromString("formatted"))).mkString("\n")
 
     val sections = Seq(
       "q01 pricing summary — filter pushdown + pruned scan + partial/final agg" ->
@@ -84,12 +88,13 @@ object PlanAudit {
             p.filter(org.apache.spark.sql.functions.col("vec_id") < 5),
             cb, 8, 64, 10)
         },
-      ("q94 IVF-PQ index serve (round 6) — the candidate side is the " +
-        "persisted (vec_id, cent_id, codes) table joined against " +
-        "BROADCAST probes; no corpus scan, no encode, no raw-vector " +
-        "column anywhere in the ADC stage (only the tiny query side " +
-        "reads embeddings)") ->
-        fmt {
+      ("q94 IVF-PQ index serve — the probes, centroids and codebooks " +
+        "are resolved on the driver, so the served scan is ONE stage " +
+        "over the persisted (vec_id, cent_id, codes) table, InSet-" +
+        "filtered to the probed lists (bucket-pruned, no Exchange, no " +
+        "join); ADC scoring and a bounded per-partition top-k run " +
+        "inside it. No corpus scan, no encode, no raw-vector column") ->
+        fmtServedScan {
           import org.apache.spark.sql.functions.col
           val p = graft.ops.Similarity.prepared(
             spark.read.parquet(s"$dir/embeddings.parquet"),
@@ -147,11 +152,11 @@ object PlanAudit {
             org.apache.spark.sql.functions.col("shuffle_rank"))),
       ("post-compaction streaming IVF-PQ serve (round 7) — after " +
         "compactPqIndexState folds the batch state into the bucketed " +
-        "asset, pqIndexServe with an empty delta IS q94's serve plan: " +
-        "broadcast probes, codes-only scan of the compacted table, no " +
-        "Exchange on cent_id, no index-keyed distinct (the retired " +
-        "state path shuffled the whole accumulated index per query)") ->
-        fmt {
+        "asset, pqIndexServe with an empty delta IS q94's served scan: " +
+        "codes-only, bucket-pruned read of the compacted table, no " +
+        "Exchange, no index-keyed distinct (the retired state path " +
+        "shuffled the whole accumulated index per query)") ->
+        fmtServedScan {
           import org.apache.spark.sql.functions.col
           val p = graft.ops.Similarity.prepared(
             spark.read.parquet(s"$dir/embeddings.parquet"),

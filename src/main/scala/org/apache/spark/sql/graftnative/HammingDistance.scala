@@ -8,7 +8,7 @@ package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, InSet}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -102,6 +102,9 @@ object GraftNative {
     ExpressionUtils.column(
       JaroWinkler(ExpressionUtils.expression(a),
         ExpressionUtils.expression(b)))
+
+  def inSet(c: Column, values: Set[Any]): Column =
+    ExpressionUtils.column(InSet(ExpressionUtils.expression(c), values))
 
   def nfcNormalize(s: Column): Column =
     ExpressionUtils.column(NfcNormalize(ExpressionUtils.expression(s)))

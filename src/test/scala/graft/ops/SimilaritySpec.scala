@@ -1011,4 +1011,174 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS thr_index_spec")
   }
 
+
+  // ---------------------------------------- served IVF-PQ == inline
+
+  private val sdims = 8
+
+  /** 40 vectors in 4 tight clusters plus exact copies of 0..3 under ids
+    * 40..43 (their cosines tie exactly; 40 also duplicates centroid 0),
+    * indexed as `table`. Returns (corpus, coarse, codebooks).
+    */
+  private def servedFixture(table: String) = {
+    val rnd = new scala.util.Random(31)
+    val centers = (0 until 4).map(c =>
+      Seq.tabulate(sdims)(d => (c * 10 + d + 1).toFloat))
+    val base = for (c <- 0 until 4; j <- 0 until 10) yield {
+      val noise = Seq.fill(sdims)((rnd.nextDouble() * 0.02 - 0.01).toFloat)
+      ((c * 10 + j).toLong, centers(c).zip(noise).map { case (a, b) => a + b })
+    }
+    val dups = base.take(4).map { case (i, v) => (i + 40L, v) }
+    val p = Similarity.prepared((base ++ dups).toDF("vec_id", "embedding"),
+      "vec_id", "embedding")
+    val coarse = Similarity.strideCentroids(p, 10L)
+    val cb = Similarity.pqCodebooks(p, m = 4, dims = sdims, stride = 10L)
+    Similarity.writePqIndex(p, coarse, cb, m = 4, dims = sdims, table,
+      numBuckets = 4)
+    (p, coarse, cb)
+  }
+
+  private def ranked(df: org.apache.spark.sql.DataFrame) =
+    df.select($"query_id", $"neighbor_id", $"cos_sim", $"rank")
+      .as[(Long, Long, Double, Long)].collect()
+      .sortBy(t => (t._1, t._4)).toSeq
+
+  test("served IVF-PQ equals the inline forms exactly (member, tied, zero and several queries)") {
+    val t = "pq_served_eq_spec"
+    val (p, coarse, cb) = servedFixture(t)
+    try {
+      // two corpus members, an all-zero vector, an off-cluster vector
+      val extra = Similarity.prepared(emb(
+          (500L, Seq.fill(sdims)(0.0f)),
+          (501L, Seq.tabulate(sdims)(d => (d % 3 - 1).toFloat))),
+        "vec_id", "embedding")
+      val qs = p.filter($"vec_id".isin(0L, 11L)).unionByName(extra)
+      val adcInline = ranked(Similarity.knnIvfPq(p, qs, coarse, cb,
+        m = 4, dims = sdims, k = 5, nProbe = 2))
+      val adcServed = ranked(Similarity.knnIvfPqOnIndex(spark, t, qs,
+        coarse, cb, m = 4, dims = sdims, k = 5, nProbe = 2))
+      assert(adcServed.map(_._1).distinct.sorted === Seq(0L, 11L, 500L, 501L))
+      assert(adcServed === adcInline)
+      // the cases are exercised: exact cos ties, the zero query at 0.0,
+      // and the member query never matching itself
+      assert(adcServed.groupBy(r => (r._1, r._3)).exists(_._2.size > 1),
+        "fixture must produce an exact cos tie")
+      assert(adcServed.filter(_._1 == 500L).forall(_._3 == 0.0))
+      assert(adcServed.forall(r => r._1 != r._2))
+      val rrInline = ranked(Similarity.knnIvfPqRerank(p, qs, coarse, cb,
+        m = 4, dims = sdims, k = 5, nProbe = 2, shortlist = 9))
+      val rrServed = ranked(Similarity.knnIvfPqRerankOnIndex(spark, t, p,
+        qs, coarse, cb, m = 4, dims = sdims, k = 5, nProbe = 2,
+        shortlist = 9))
+      assert(rrServed === rrInline)
+      // a shortlist larger than the probed candidates: fewer than k rows
+      val bigInline = ranked(Similarity.knnIvfPqRerank(p, qs, coarse, cb,
+        m = 4, dims = sdims, k = 40, nProbe = 2, shortlist = 500))
+      val bigServed = ranked(Similarity.knnIvfPqRerankOnIndex(spark, t, p,
+        qs, coarse, cb, m = 4, dims = sdims, k = 40, nProbe = 2,
+        shortlist = 500))
+      assert(bigServed === bigInline)
+      assert(bigServed.groupBy(_._1).values.exists(_.size < 40))
+      // every index row twice (table and delta both holding a vec_id):
+      // a neighbor keeps its one best score, nothing doubles
+      val twice = spark.table(t).unionByName(spark.table(t))
+      assert(ranked(Similarity.knnIvfPqOnCodes(twice, qs, coarse, cb,
+        m = 4, dims = sdims, k = 5, nProbe = 2)) === adcInline)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("served filtered kNN equals the inline pre-filtered form; an allowed set missing every probed list returns no rows") {
+    val t = "pq_served_filt_spec"
+    val (p, coarse, cb) = servedFixture(t)
+    try {
+      val qs = p.filter($"vec_id".isin(0L, 11L, 23L))
+      def both(allowed: org.apache.spark.sql.DataFrame, nProbe: Int) = (
+        ranked(Similarity.knnIvfPqRerank(
+          p.join(allowed, Seq("vec_id"), "left_semi"), qs, coarse, cb,
+          m = 4, dims = sdims, k = 5, nProbe = nProbe, shortlist = 9)),
+        ranked(Similarity.knnIvfPqRerankFiltered(spark, t, p, qs, coarse,
+          cb, m = 4, dims = sdims, k = 5, nProbe = nProbe, shortlist = 9,
+          allowed = allowed)))
+      val (inl, srv) = both(p.filter($"vec_id" % 3 =!= 0).select($"vec_id"), 2)
+      assert(srv.nonEmpty && srv === inl)
+      assert(srv.forall(_._2 % 3 != 0))
+      // cluster 3 only, while nProbe = 1 keeps every query in its own
+      // cluster's list (the three queries sit in clusters 0, 1 and 2)
+      val (inl0, srv0) = both(p.filter($"vec_id".between(30L, 39L))
+        .select($"vec_id"), 1)
+      assert(inl0.isEmpty && srv0.isEmpty)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("hybridRrfBatchFromIndex equals fuseRrfRankedPerQuery over the inline vector leg") {
+    val t = "pq_served_hyb_spec"
+    val (p, coarse, cb) = servedFixture(t)
+    val (post, df, st) = ("hyb_spec_post", "hyb_spec_df", "hyb_spec_stats")
+    try {
+      val docs = (0L until 44L).map(i =>
+        (i, s"w${i % 5} w${i % 7} w${i % 3} common")).toDF("doc_id", "text")
+      graft.search.Search.writeBm25Index(docs, "doc_id", Seq("text"),
+        post, df, st, numBuckets = 2)
+      val qToks = Seq((0L, "w1"), (0L, "w3"), (11L, "w2"), (11L, "w6"))
+        .toDF("query_id", "tok")
+      val qVecs = p.filter($"vec_id".isin(0L, 11L))
+      val served = graft.search.Search.hybridRrfBatchFromIndex(spark, post,
+        df, st, "text", qToks, t, p, qVecs, coarse, cb, m = 4, dims = sdims,
+        n = 8, k = 5, nProbe = 2, shortlist = 12)
+      val inline = graft.search.Search.fuseRrfRankedPerQuery(
+        graft.search.Search.bm25MultiQueryFromIndex(spark, post, df, st,
+          "text", qToks),
+        Similarity.knnIvfPqRerank(p, qVecs, coarse, cb, m = 4, dims = sdims,
+          k = 8, nProbe = 2, shortlist = 12), n = 8, k = 5)
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select($"query_id", $"id", $"rrf_fp", $"rank")
+          .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      val s = rows(served)
+      assert(s.map(_._1).distinct === Seq(0L, 11L))
+      assert(s === rows(inline))
+    } finally Seq(t, post, df, st).foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+
+  test("served IVF-PQ compiles no code per request (InSet probe and shortlist filters)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(41)
+    val rows = (0L until 240L).map(i =>
+      (i, Seq.fill(sdims)((rnd.nextDouble() * 2 - 1).toFloat)))
+    val p = Similarity.prepared(rows.toDF("vec_id", "embedding"),
+      "vec_id", "embedding")
+    val (t, coarseT, cbT) = ("pq_codegen_spec", "pq_codegen_coarse", "pq_codegen_cb")
+    // 40 lists probed 3 at a time: nearly every request a new probe set
+    graft.Tables.writeTable(Similarity.strideCentroids(p, 6L), coarseT)
+    graft.Tables.writeTable(Similarity.pqCodebooks(p, 4, sdims, 12L), cbT)
+    Similarity.writePqIndex(p, spark.table(coarseT), spark.table(cbT), 4,
+      sdims, t, numBuckets = 4)
+    val allowed = p.filter($"vec_id" % 3 =!= 0).select($"vec_id")
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    def request(i: Int): Unit = {
+      val q = Similarity.prepared(spark.createDataFrame(
+        java.util.Collections.singletonList(Row(100000L + i,
+          Seq.fill(sdims)((rnd.nextDouble() * 2 - 1).toFloat))), schema),
+        "vec_id", "embedding")
+      val (coarse, cb) = (spark.table(coarseT), spark.table(cbT))
+      assert(Similarity.knnIvfPqRerankOnIndex(spark, t, p, q, coarse, cb,
+        4, sdims, 5, 3, 12).collect().length === 5)
+      Similarity.knnIvfPqRerankFiltered(spark, t, p, q, coarse, cb, 4,
+        sdims, 5, 3, 12, allowed).collect()
+    }
+    def pass(reqs: Range): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      reqs.foreach(request)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    try {
+      pass(0 until 20)
+      val second = pass(20 until 40) // 20 new vectors, new probe sets
+      assert(second === 0L, s"second pass compiled $second classes")
+    } finally Seq(t, coarseT, cbT).foreach(x =>
+      spark.sql(s"DROP TABLE IF EXISTS $x"))
+  }
+
 }
