@@ -1172,10 +1172,11 @@ object Similarity {
     }
   }
 
-  /** Step 1: collect the operands (the two quantizer tables
-    * concurrently — the helper thread inherits the caller's Spark
-    * local properties), pick each query's `nProbe` lists by
-    * [[probeLists]]' rule and build its ADC table by [[pqLut]]'s.
+  /** Step 1: collect the operands, pick each query's `nProbe` lists
+    * by [[probeLists]]' rule and build its ADC table by [[pqLut]]'s.
+    * The three collects run one after the other: overlapping the
+    * codebook collect on a helper thread saved about 10 ms a request
+    * once run-to-run drift is taken out (PROFILE.md), inside the spread.
     */
   private def adcOperands(queries: DataFrame, coarse: DataFrame,
                           codebooks: DataFrame, m: Int, dims: Int,
@@ -1188,22 +1189,9 @@ object Similarity {
     val cbFrame = codebooks.select(col("sub_id").cast("long"),
       col("cent_id").cast("long"), col("c_sub").cast("array<bigint>"),
       col("c_n2").cast("long"))
-    // plan all three before going concurrent: operands built over one
-    // local relation share expression objects, and the optimizer
-    // evaluates their interpreted lambda variables (quantize's
-    // transform) in place, so planning on two threads at once
-    // corrupts rows
-    Seq(qFrame, cFrame, cbFrame).foreach(_.queryExecution.executedPlan)
-    val cbTask = new java.util.concurrent.FutureTask[Array[Row]](() =>
-      cbFrame.collect())
-    val cbThread = new Thread(cbTask, "graft-ivfpq-codebooks")
-    cbThread.setDaemon(true)
-    cbThread.start()
     val qs = collectVecs(qFrame)
     val cents = collectVecs(cFrame)
-    val cbRows =
-      try cbTask.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    val cbRows = cbFrame.collect()
     require(qs.map(_.id).distinct.length == qs.length,
       "served IVF-PQ needs distinct query vec_ids")
     val probesOf = qs.indices

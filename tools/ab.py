@@ -2,16 +2,16 @@
 """Interleaved A/B of two checkouts on their own benchmark.
 
     python3 tools/ab.py --parent DIR --change DIR --workload serve \
-        [--workload maintain] --seeds 3-12 [--seconds 12] [--trace 0] \
-        [--out runs.jsonl]
+        [--workload maintain] --seeds 3-12 [--trace 0] [--out runs.jsonl]
     python3 tools/ab.py --report runs.jsonl [--change DIR]
 
 For every seed it runs `python3 perfbench/run.py` once in each checkout
 (each side runs its own copy of the harness and engine), alternating which
 side goes first from one pair to the next so slow drift of the machine
-does not favour one side. Each run's last-line JSON and its wall time are
-kept (appended to --out as one JSON object per run). Per workload and
-metric it prints both sides' medians and quartiles, the per-pair
+does not favour one side. Every run lasts the `run_seconds` that the
+change checkout's BENCHMARK.json fixes. Each run's last-line JSON and its
+wall time are kept (appended to --out as one JSON object per run). Per
+workload and metric it prints both sides' medians and quartiles, the per-pair
 change/parent ratios, how many pairs the change won, and whether the
 median gain exceeds the parent's interquartile range. The direction of
 each metric ("better": lower/higher) is read from the change checkout's
@@ -67,9 +67,12 @@ def run_one(checkout, workload, seed, seconds, trace):
     return res, wall
 
 
-def directions(checkout):
+def load_bench(checkout):
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+        return json.load(f)
+
+
+def directions(bench):
     d = {m["name"]: m["better"]
          for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
     d["wall_s"] = "lower"
@@ -142,18 +145,18 @@ def main():
     ap.add_argument("--change", default=".")
     ap.add_argument("--workload", action="append")
     ap.add_argument("--seeds", type=seeds_arg)
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out")
     ap.add_argument("--report")
     a = ap.parse_args()
     if a.report:
-        sys.exit(report_file(a.report, directions(a.change)))
+        sys.exit(report_file(a.report, directions(load_bench(a.change))))
     if not (a.parent and a.workload and a.seeds):
         ap.error("--parent, --workload and --seeds are required to run")
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
-    better = directions(sides["change"])
+    bench = load_bench(sides["change"])
+    better = directions(bench)
     incorrect = 0
     for workload in a.workload:
         pairs = []
@@ -161,8 +164,8 @@ def main():
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
             runs = {}
             for side in order:
-                res, wall = run_one(sides[side], workload, seed, a.seconds,
-                                    a.trace)
+                res, wall = run_one(sides[side], workload, seed,
+                                    bench["run_seconds"], a.trace)
                 runs[side] = (res, wall)
                 ok = bool(res.get("correct"))
                 incorrect += 0 if ok else 1
